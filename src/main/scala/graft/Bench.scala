@@ -36,12 +36,12 @@ import graft.tools.{BenchRecord, Fork}
   *    (tps_hi/tps_lo)/(hi/lo), each pair's replay input sized to its
   *    high level (convsFor) so the fixed per-run cost stays under ~10%;
   *  - the skew regime (north_star: salting for hot conversations):
-  *    hot-conversation input through unsalted/salted fmgws and the tws
-  *    ListState engine (tools.SkewBlock);
+  *    hot-conversation input through the unsalted and the salted
+  *    session join (tools.SkewBlock);
   *  - the skew-HEAVY regime (salting-pays: conv-keyed time-sliced
   *    ingest + heavy per-turn map; graft.SkewHeavyBench child);
-  *  - sustained (SPARK_GRAFT_SUSTAINED, default on): one long trial per
-  *    engine at ~3.4x the flagship input, corpus staged to DISK by a
+  *  - sustained (SPARK_GRAFT_SUSTAINED, default on): one long trial
+  *    at ~3.4x the flagship input, corpus staged to DISK by a
   *    StageBlock child, block cache sized to the state working set.
   *
   * Every streaming block carries emission accounting (batch-oracle pair
@@ -77,8 +77,8 @@ object Bench {
     // scaling pairs from the per-combo blocks
     val pairJsons = p.pairs.map { case (lo, hi) =>
       val n = p.convsFor(hi)
-      val tLo = rec.field(s"scaling_c${lo}_n$n", "{", "turns_per_sec")
-      val tHi = rec.field(s"scaling_c${hi}_n$n", "{", "turns_per_sec")
+      val tLo = rec.field(s"scaling_c${lo}_n$n", "turns_per_sec")
+      val tHi = rec.field(s"scaling_c${hi}_n$n", "turns_per_sec")
       val eff =
         if (tLo == "null" || tHi == "null" || tLo.toDouble == 0) "null"
         else f((tHi.toDouble / tLo.toDouble) / (hi.toDouble / lo))
@@ -108,34 +108,31 @@ object Bench {
     val skewCompact =
       if (!rec.has("skew")) "null"
       else {
-        val names = Seq("fmgws", "fmgws_salted", "tws",
-          s"fmgws_fpt${p.latFpt}", s"tws_fpt${p.latFpt}")
-        names.map(n => s""""$n":${rec.field("skew", s""""$n":""", "best_tps")}""")
+        val names = Seq("unsalted", "salted", s"unsalted_fpt${p.latFpt}")
+        names.map(n => s""""$n":${rec.field("skew", n, "best_tps")}""")
           .mkString(s"""{"hot":${p.hotConvs},"hot_mult":${p.hotMult},""", ",", "}")
       }
     val skewHeavyCompact =
       if (!rec.has("skew_heavy")) "null"
       else {
-        val names = Seq("light_unsalted", "light_salted", "heavy_unsalted",
-          "heavy_salted", "heavy_unsalted_tws", "heavy_salted_tws")
-        val cfgs = names.map(n => s""""$n":${rec.field("skew_heavy", s""""$n":""", "best_tps")}""")
+        val names = Seq("light_unsalted", "light_salted", "heavy_unsalted", "heavy_salted")
+        val cfgs = names.map(n => s""""$n":${rec.field("skew_heavy", n, "best_tps")}""")
         (Seq(
-          s""""sanity_ok":${rec.field("skew_heavy", "{", "sanity_ok") != "0"}""",
-          s""""pair_share":${rec.field("skew_heavy", "{", "emitted_pair_share")}""") ++ cfgs)
+          s""""sanity_ok":${rec.field("skew_heavy", "sanity_ok") != "0"}""",
+          s""""pair_share":${rec.field("skew_heavy", "emitted_pair_share")}""") ++ cfgs)
           .mkString("{", ",", "}")
       }
     val sustainedCompact =
       if (!rec.has("sustained")) "null"
-      else s"""{"fmgws_tps":${rec.field("sustained", "\"fmgws\":", "turns_per_sec")},""" +
-        s""""tws_tps":${rec.field("sustained", "\"tws\":", "turns_per_sec")},""" +
-        s""""max_state_rows":${rec.field("sustained", "\"fmgws\":", "max_state_rows")},""" +
-        s""""pairs":${rec.field("sustained", "\"fmgws\":", "pairs")},""" +
-        s""""batch_pairs":${rec.field("sustained", "{", "batch_pairs")}}"""
+      else s"""{"turns_per_sec":${rec.field("sustained", "run", "turns_per_sec")},""" +
+        s""""max_state_rows":${rec.field("sustained", "run", "max_state_rows")},""" +
+        s""""pairs":${rec.field("sustained", "run", "pairs")},""" +
+        s""""batch_pairs":${rec.field("sustained", "batch_pairs")}}"""
 
     val compact =
-      s"""{"metric":"total","value":${rec.field("sweep", "{", "total_query_sec")},"unit":"sec","sf":"${p.sfDir}",""" +
-        s""""n_queries":${rec.field("sweep", "{", "n_queries")},""" +
-        s""""failed_queries":${rec.field("sweep", "{", "failed_queries")},""" +
+      s"""{"metric":"total","value":${rec.field("sweep", "total_query_sec")},"unit":"sec","sf":"${p.sfDir}",""" +
+        s""""n_queries":${rec.field("sweep", "n_queries")},""" +
+        s""""failed_queries":${rec.field("sweep", "failed_queries")},""" +
         s""""detail":"${p.detailPath}",""" +
         s""""flagship":${rec.json("flagship")},""" +
         s""""scaling":${pairJsons.mkString("[", ",", "]")},""" +
@@ -219,8 +216,8 @@ object Bench {
     val dirRe = """"dir":"([^"]+)"""".r
     val bpRe = """"batch_pairs":(-?\d+)""".r
 
-    // ---- sustained: staging child (disk corpus) + one Flagship child
-    // per engine, FIRST — the BASELINE metric's amortizing regime -------
+    // ---- sustained: staging child (disk corpus) + one Flagship child,
+    // FIRST — the BASELINE metric's amortizing regime -------------------
     if (sustainedConvs > 0) {
       val staged = Fork.json("graft.tools.StageBlock",
         Seq(sustainedConvs.toString, nFiles.toString, cpus.toString, "0", "20", "1"),
@@ -230,20 +227,16 @@ object Bench {
         dir <- dirRe.findFirstMatchIn(s).map(_.group(1))
         bp <- bpRe.findFirstMatchIn(s).map(_.group(1).toLong)
       } yield {
-        val rows = Seq("fmgws", "tws").map { eng =>
-          val line = Fork.json("graft.Flagship",
-            Seq(sustainedConvs.toString, cpus.toString, fpt.toString,
-              nFiles.toString, (2 * cpus).toString, eng, dir),
-            heapGB = 16,
-            env = Map("SPARK_GRAFT_EXTRA_CONF" ->
-              "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB=2048"))._1
-          line.foreach(l => System.err.println(s"[bench] sustained $eng $l"))
-          s""""$eng":${line.getOrElse("null")}"""
-        }
+        val line = Fork.json("graft.Flagship",
+          Seq(sustainedConvs.toString, cpus.toString, fpt.toString,
+            nFiles.toString, (2 * cpus).toString, dir),
+          heapGB = 16,
+          env = Map("SPARK_GRAFT_EXTRA_CONF" ->
+            "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB=2048"))._1
+        line.foreach(l => System.err.println(s"[bench] sustained $l"))
         deleteDir(dir)
-        rows.mkString(
-          s"""{"convs":$sustainedConvs,"batch_pairs":$bp,"block_cache_mb":2048,""",
-          ",", "}")
+        s"""{"convs":$sustainedConvs,"batch_pairs":$bp,"block_cache_mb":2048,""" +
+          s""""run":${line.getOrElse("null")}}"""
       }
       rc("sustained", assembled)
     }

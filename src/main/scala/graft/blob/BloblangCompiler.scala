@@ -209,12 +209,12 @@ object BloblangCompiler {
       thisCol: Option[String] = None): Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] =
     tryCompileFull(program, schema, env, metaCol, thisCol).map { case (cols, wholeRoot) => df =>
       val assigned = cols.map(_._1).toSet
-      // whole-document replacement keeps nothing but the new root (and a
-      // written meta column); field assignment keeps unassigned inputs
-      val kept =
-        if (wholeRoot) Array.empty[Column]
-        else df.schema.fieldNames.filterNot(assigned).map(col(_))
-      df.select(kept ++ cols.map { case (n, c) => c.as(n) }: _*)
+      // whole-document replacement keeps the new root and the message
+      // metadata (written, or passed through as the interpreter does);
+      // field assignment keeps every unassigned input
+      val kept = df.schema.fieldNames
+        .filter(n => !assigned(n) && (!wholeRoot || n == metaCol))
+      df.select(kept.map(col(_)) ++ cols.map { case (n, c) => c.as(n) }: _*)
     }
 
   /** One node of the nested-assignment tree: a leaf is the (last) column

@@ -1,39 +1,33 @@
 package graft.streaming
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.model.{BufTurn, PairedTurn, Turn}
+import graft.model.BufTurn
 
-/** Versioned state envelope for the fmgws session join: the persisted
-  * state value is a BINARY blob carrying a 1-byte version tag, decoded
-  * through per-version shims on read and always written at the current
-  * version. This is the durable-checkpoint evolution mechanism the
-  * BufTurn doc note names (Model.scala): Spark validates the CATALYST
-  * state schema on restore, so any case-class change (the round-3
-  * conv_id slim, round-4's tws meta slot) forces a full state rebuild —
-  * but a binary column's schema never changes, and the tag moves the
-  * compatibility decision into this codec, where an old layout is a
-  * read-path migration instead of a rebuild.
-  *
-  * The flagship default (`SessionJoin.pairStreaming`) keeps
-  * Catalyst-encoded state — bench checkpoints are per-run ephemeral and
-  * the typed encoder is the faster hot path. `pairStreaming` here is
-  * the drop-in for deployments with durable checkpoints;
-  * SessionJoinSpec's resume-across-schema-change case stops a query
-  * writing VERSION 1 (the legacy pre-slim layout, conv_id inside every
-  * buffered row) and resumes it writing version 2, exactly-once output
-  * intact.
+/** Versioned binary codec for the session join's state value
+  * (`SessionJoin.ConvState`): a blob carrying a 1-byte version tag,
+  * decoded through per-version shims on read and written at the current
+  * version. Spark validates a CATALYST state schema on restore, so any
+  * case-class change (the round-3 conv_id slim, for one) would force a
+  * full state rebuild — but a binary column's schema never changes, and
+  * the tag moves the compatibility decision into this codec, where an
+  * old layout is a read-path migration instead of a rebuild.
+  * SessionJoinSpec stops a query writing VERSION 1 (the legacy pre-slim
+  * layout, conv_id inside every buffered row) and resumes it writing
+  * versions 2 and then 3, exactly-once output intact.
   *
   * Versions:
   *   1 — legacy layout (reference for migration): per buffered turn
   *       {conv_id, turn_idx, role, text, tool, tsMs}; the conv_id is
   *       redundant (it is the state key) and is DROPPED on read.
-  *   2 — current slim layout: {turn_idx, role, text, tool, tsMs}.
+  *   2 — slim layout: {turn_idx, role, text, tool, tsMs}.
+  *   3 — current: v2 plus the timestamp's nanos-of-second. v1 and v2
+  *       kept epoch milliseconds only, truncating Spark's microsecond
+  *       timestamps, so a streamed pair's user_ts/reply_ts differed from
+  *       the batch form's; they still decode, at millisecond precision.
   */
 object StateEnvelope {
 
-  val CurrentVersion = 2
+  val CurrentVersion = 3
 
   private def writeStr(o: DataOutputStream, s: String): Unit =
     if (s == null) o.writeInt(-1)
@@ -61,7 +55,7 @@ object StateEnvelope {
     st.buffered.foreach { t =>
       version match {
         case 1 => writeStr(o, convId) // legacy layout carried the key
-        case 2 => ()
+        case 2 | 3 => ()
         case v => throw new IllegalArgumentException(s"unknown state version $v")
       }
       o.writeInt(t.turn_idx)
@@ -69,6 +63,7 @@ object StateEnvelope {
       writeStr(o, t.text)
       writeStr(o, t.tool)
       o.writeLong(t.ts.getTime)
+      if (version >= 3) o.writeInt(t.ts.getNanos)
     }
     o.flush()
     bos.toByteArray
@@ -86,79 +81,16 @@ object StateEnvelope {
     (0 until n).foreach { _ =>
       ver match {
         case 1 => readStr(i): Unit // legacy conv_id: redundant, dropped
-        case 2 => ()
-        case v => throw new IllegalStateException(s"unknown state version $v in checkpoint")
+        case _ => ()
       }
       val idx = i.readInt()
       val role = readStr(i)
       val text = readStr(i)
       val tool = readStr(i)
       val ts = new java.sql.Timestamp(i.readLong())
+      if (ver >= 3) ts.setNanos(i.readInt())
       buf += BufTurn(idx, role, text, tool, ts)
     }
     SessionJoin.ConvState(buf.result(), flushed)
-  }
-
-  /** fmgws session join with enveloped state. Same semantics as
-    * `SessionJoin.pairStreaming` — late-drop rule, eager data-path
-    * flush, first-open-close timer, tombstone eviction — via the shared
-    * `splitClosed`/`pairTurns`/`closePointMs`; only the state VALUE
-    * representation differs (binary envelope vs Catalyst encoder).
-    */
-  def pairStreaming(
-      turns: Dataset[Turn],
-      gapSeconds: Long = SessionJoin.DefaultGapSeconds,
-      lateness: String = "10 minutes",
-      writeVersion: Int = CurrentVersion): Dataset[PairedTurn] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    turns
-      .withWatermark("ts", lateness)
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        processConv(gapSeconds, writeVersion))
-  }
-
-  private def processConv(gapSeconds: Long, writeVersion: Int)(
-      convId: String,
-      incoming: Iterator[Turn],
-      state: GroupState[Array[Byte]]): Iterator[PairedTurn] = {
-    val old = state.getOption.map(decode).getOrElse(SessionJoin.ConvState(Nil, 0L))
-    val wm = state.getCurrentWatermarkMs()
-    if (state.hasTimedOut) {
-      if (old.buffered.isEmpty) { state.remove(); Iterator.empty }
-      else flushAndRearm(convId, old, Nil, gapSeconds, wm, state, writeVersion)
-    } else {
-      val fresh = incoming.filter(t => wm == 0 || t.ts.getTime >= wm).toList
-      if (old.buffered.isEmpty && fresh.isEmpty) Iterator.empty
-      else flushAndRearm(convId, old, fresh.map(BufTurn.of), gapSeconds, wm,
-        state, writeVersion)
-    }
-  }
-
-  // envelope twin of SessionJoin.flushAndRearm (same decisions, state
-  // stored through encode())
-  private def flushAndRearm(
-      convId: String,
-      old: SessionJoin.ConvState,
-      freshTurns: List[BufTurn],
-      gapSeconds: Long,
-      wm: Long,
-      state: GroupState[Array[Byte]],
-      writeVersion: Int): Iterator[PairedTurn] = {
-    val buf = old.buffered ++ freshTurns
-    val (closed, open, firstOpenEnd) = SessionJoin.splitClosed(buf, gapSeconds, wm)
-    val pairs =
-      if (closed.isEmpty) Nil
-      else SessionJoin.pairTurns(closed.flatten.map(BufTurn.toTurn(convId, _)), gapSeconds)
-        .map(p => p.copy(session_id = p.session_id + old.flushedSessions))
-    state.update(encode(convId,
-      SessionJoin.ConvState(open, old.flushedSessions + closed.size), writeVersion))
-    if (open.isEmpty)
-      state.setTimeoutTimestamp(wm + gapSeconds * 1000)
-    else
-      state.setTimeoutTimestamp(
-        math.max(SessionJoin.closePointMs(firstOpenEnd, gapSeconds), wm + 1))
-    pairs.iterator
   }
 }

@@ -43,16 +43,20 @@ final class BenchRecord(val partsPath: String) {
 
   def lostJson: String = lost.map("\"" + _ + "\"").mkString("[", ",", "]")
 
-  /** Extract a numeric field from a block's JSON, scoped to the text
-    * after `anchor` (pass "{" for whole-record scope). Returns "null"
-    * when the block or field is absent — assembled records degrade to
-    * nulls, never to exceptions.
+  /** A field of a block's JSON, addressed by path from the block's root
+    * (`field("skew", "salted", "best_tps")`), rendered as a JSON literal
+    * to splice into an assembled record. Returns "null" when the block,
+    * the path or a parseable body is absent — assembled records degrade
+    * to nulls, never to exceptions.
     */
-  def field(name: String, anchor: String, fieldName: String): String = {
-    val js = json(name)
-    val i = js.indexOf(anchor)
-    if (i < 0) "null"
-    else ("\"" + fieldName + "\":(-?[0-9.]+)").r
-      .findFirstMatchIn(js.substring(i)).map(_.group(1)).getOrElse("null")
-  }
+  def field(name: String, path: String*): String =
+    scala.util.Try(BenchRecord.mapper.readTree(json(name)))
+      .map(root => path.foldLeft(root)((n, k) => n.path(k)))
+      .filter(n => n.isValueNode && !n.isNull)
+      .map(_.toString)
+      .getOrElse("null")
+}
+
+object BenchRecord {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 }

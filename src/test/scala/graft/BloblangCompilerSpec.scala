@@ -326,6 +326,24 @@ class BloblangCompilerSpec extends SparkTestBase {
     assert(m2.keySet === Set("topic", "n_plus"))
   }
 
+  test("whole-root replacement keeps the message metadata like the interpreter") {
+    val program = """root = this.s.uppercase() + "!""""
+    val meta0 = Map("topic" -> "in", "k" -> "v")
+    val metaDf = df.withColumn("meta",
+      org.apache.spark.sql.functions.map(lit("topic"), lit("in"), lit("k"), lit("v")))
+    val stage = BloblangCompiler.stage(program, metaDf.schema)
+      .getOrElse(fail("whole-root program did not compile"))
+    val out = stage(metaDf)
+    assert(out.schema.fieldNames.toSet === Set("root", "meta"))
+    out.select(col("root"), col("meta")).collect().zip(rows).foreach { case (r, in) =>
+      val res = Bloblang.compile(program).run(
+        M.writeValueAsBytes(java.util.Map.of("s", in._1)), meta0 = meta0)
+      assert(res.error.isEmpty)
+      assert(r.getString(0) === res.text.get)
+      assert(r.getMap[String, String](1).toMap === res.meta)
+    }
+  }
+
   test("compiled plan is UDF-free; interpreted plan is not") {
     val program = """root.up = this.s.uppercase()
                     |root.tag = match this.s { "user" => "U", _ => "o" }""".stripMargin

@@ -8,11 +8,11 @@ import graft.gen.TranscriptGen
 import graft.model.{PairedTurn, Turn}
 import graft.streaming.SessionJoin
 
-/** The flagship operator: three implementations (pure Scala spec,
-  * window-function batch, flatMapGroupsWithState streaming) must agree on
-  * the same input — and the streaming one must survive a checkpoint stop/
-  * resume without duplicating or losing pairs (exactly-once, BASELINE.json
-  * north_rule).
+/** The flagship operator: the pure Scala spec, the window-function batch
+  * form and the streaming engine must agree on the same input — and the
+  * streaming one must survive a checkpoint stop/resume, including one
+  * across a state-schema change, without duplicating or losing pairs
+  * (exactly-once, BASELINE.json north_rule).
   */
 class SessionJoinSpec extends SparkTestBase {
   import spark.implicits._
@@ -116,26 +116,89 @@ class SessionJoinSpec extends SparkTestBase {
     val mem = MemoryStream[Turn]
     def run(writeVersion: Int, data: Seq[Turn]): Unit = {
       if (data.nonEmpty) mem.addData(data)
-      val paired = graft.streaming.StateEnvelope.pairStreaming(
+      val paired = SessionJoin.pairStreamingWriting(
         mem.toDS(), gap, "10 minutes", writeVersion)
       val q = graft.streaming.Sink.exactlyOnce(paired, outDir, ckDir,
         Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    val (h1, h2) = input.sortBy(_.ts.getTime).splitAt(input.size / 2)
+    val sorted = input.sortBy(_.ts.getTime)
+    val (h1, rest) = sorted.splitAt(input.size / 2)
+    val (h2, h3) = rest.splitAt(rest.size / 2)
+    val current = graft.streaming.StateEnvelope.CurrentVersion
     // phase 1 persists LEGACY-layout (v1) state into the checkpoint
     run(writeVersion = 1, h1)
     // phase 2: the upgraded engine reads the v1 checkpoint through the
     // migration shim and writes v2 — the schema change a Catalyst-encoded
-    // state value would reject at restore
+    // state value would reject at restore; phase 3 migrates v2 onward
     run(writeVersion = 2, h2)
-    run(writeVersion = 2, Seq(Turn("zzz-flush", 0, "user", "flush", null,
+    run(writeVersion = current, h3)
+    run(writeVersion = current, Seq(Turn("zzz-flush", 0, "user", "flush", null,
       new Timestamp(input.map(_.ts.getTime).max + 10 * 3600 * 1000))))
-    run(writeVersion = 2, Nil) // let the armed timeout fire
+    run(writeVersion = current, Nil) // let the armed timeout fire
 
     val got = graft.streaming.Sink.readCommitted(spark, outDir)
       .drop("_batch_id", "_partition_id").as[PairedTurn].collect().toSeq
     assert(sortPairs(got) == expected)
+  }
+
+  test("streaming keeps microsecond timestamps through buffered state") {
+    def micros(sec: Long, us: Int) = {
+      val t = new Timestamp(sec * 1000); t.setNanos(us * 1000); t
+    }
+    val input = Seq(
+      Turn("m1", 0, "user", "q", null, micros(1000, 123456)),
+      Turn("m1", 1, "assistant", "a", null, micros(1010, 654321)))
+    val expected = sortPairs(SessionJoin.pairBatch(input.toDF(), gap)
+      .as[PairedTurn].collect().toSeq)
+    assert(expected.map(_.user_ts.getNanos) == Seq(123456000))
+
+    val outDir = Files.createTempDirectory("sjm-out").toString
+    val ckDir = Files.createTempDirectory("sjm-ck").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "1 minute")
+    def runOnce(): Unit = graft.streaming.Sink.exactlyOnce(paired, outDir, ckDir,
+      Trigger.AvailableNow()).start().awaitTermination()
+    mem.addData(input); runOnce() // buffered: the session is still open
+    mem.addData(Seq(Turn("zz", 0, "user", "f", null, new Timestamp(99999L * 1000))))
+    runOnce(); runOnce()
+    val got = graft.streaming.Sink.readCommitted(spark, outDir)
+      .filter($"conv_id" === "m1")
+      .drop("_batch_id", "_partition_id").as[PairedTurn].collect().toSeq
+    assert(sortPairs(got) == expected)
+  }
+
+  test("conversation resuming after flush continues session numbering") {
+    val gap = 600L
+    def t(i: Int, role: String, sec: Long) =
+      Turn("c1", i, role, s"t$i", null, new Timestamp(sec * 1000))
+    val burst1 = Seq(t(0, "user", 1000), t(1, "assistant", 1010))
+    val burst2 = Seq(t(2, "user", 50000), t(3, "assistant", 50010))
+    val flush1 = Turn("zz1", 0, "user", "f", null, new Timestamp(20000L * 1000))
+    val flush2 = Turn("zz2", 0, "user", "f", null, new Timestamp(99999L * 1000))
+
+    val outDir = Files.createTempDirectory("sjn-out").toString
+    val ckDir = Files.createTempDirectory("sjn-ck").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "1 minute")
+    def runOnce(): Unit = {
+      val q = graft.streaming.Sink.exactlyOnce(paired, outDir, ckDir,
+        Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    mem.addData(burst1); runOnce()
+    mem.addData(Seq(flush1)); runOnce(); runOnce() // burst1 session flushes
+    mem.addData(burst2); runOnce()
+    mem.addData(Seq(flush2)); runOnce(); runOnce() // burst2 flushes
+
+    val got = graft.streaming.Sink.readCommitted(spark, outDir)
+      .filter(!$"conv_id".startsWith("zz"))
+      .select("session_id", "user_turn_idx", "reply_turn_idx")
+      .as[(Long, Int, Int)].collect().toSeq.sorted
+    // second burst is session 1 — numbering survived the first flush
+    assert(got == Seq((0L, 0, 1), (1L, 2, 3)))
   }
 
   test("generator is deterministic across parallelism") {
